@@ -18,12 +18,14 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.q5OrdersBrandClientJoin(spark, "/root/testdata/sf0.001")
 
-  /** The ORACLE-exact forms: one per operator, each with a DuckDB replay
-    * in [[oracleSql]]. Three of them buy bit-exact DuckDB agreement with
-    * per-group state that grows with the group (fold-exact centroid sums,
-    * unbounded postings, exact percentile) — correct, but not what a user
-    * should run at 100 TB, so [[productionOverrides]] substitutes
-    * scale-safe equivalents into the production registry. */
+  /** One form per operator, each with a DuckDB replay in [[oracleSql]].
+    * Every operator registers the form a user runs at scale, and the
+    * DuckDB gate checks that same form (`OracleGateSpec`), except for
+    * the three rows in [[productionOverrides]]: there the registered form
+    * buys bit-exact DuckDB agreement with per-group state that grows
+    * with the group (unbounded postings, exact percentile, uncapped
+    * winnow fingerprints), and production substitutes a scale-safe form
+    * the unchanged SQL cannot match. */
   private def oracleEntries: Map[String, (SparkSession, String) => DataFrame] =
     Relational.entries ++ TextAnalysis.entries ++ Dedup.entries ++
       Similarity.entries ++ Events.entries ++ Denorm.entries ++
@@ -40,14 +42,11 @@ object SparkEntry {
       ("pipeline_curated_lineage" -> ((s: SparkSession, d: String) =>
         PipelineRun.curatedLineageFlat(s, d)))
 
-  /** Scale-safe production substitutions — same query name, bounded
-    * aggregation state (`ScaleSafetySpec` pins both the plan property —
-    * no unbounded collect_list / exact percentile anywhere in the
-    * production registry — and value agreement with the oracle forms):
-    *   - centroid: fixed 64-double [[graft.functions.VectorSumSketch]]
-    *     buffer instead of the per-(lang, dim) collect_list fold;
-    *   - IVF ANN: the Lloyd-refined cell sums on the same fixed buffer
-    *     instead of the oracle's fold-exact per-(cell, dim) collection;
+  /** The three rows whose production form differs from the gated form
+    * BY DESIGN — same query name, bounded aggregation state
+    * (`ScaleSafetySpec` pins the plan property — no unbounded
+    * collect_list / exact percentile anywhere in the production
+    * registry — and brackets each against its exact form):
     *   - inverted index: postings capped at 100 via the bounded-heap
     *     top-k operator before collection (df stays exact; the capped
     *     form is ALSO oracle-gated as `text_inverted_index_capped`);
@@ -57,37 +56,13 @@ object SparkEntry {
     *     (boilerplate hashes cost df² pairs and carry no signal — the
     *     round-10 Zipfian 100× run measured the uncapped blowup; the
     *     capped form is ALSO oracle-gated as
-    *     `text_winnow_matches_capped`). */
+    *     `text_winnow_matches_capped`).
+    * `ProductionRegistrySpec` pins this key set, so a new twin cannot
+    * come back without a test edit. */
   def productionOverrides: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_centroid_by_lang" -> (Similarity.centroidByLangProd _),
-    "sim_ann_ivf" -> (Similarity.annIvfProd _),
     "text_inverted_index" -> (TextAnalysis.invertedIndexCapped _),
     "text_winnow_matches" -> (TextAnalysis.winnowMatchesCapped _),
-    "events_value_quantiles" -> (Events.valueQuantilesApprox _),
-    "sim_quantize_sq" -> (Similarity.quantizeSqProd _),
-    "sim_ann_ivf_sq" -> (Similarity.annIvfSqProd _),
-    "sim_quantize_pq" -> (Similarity.quantizePqProd _),
-    "sim_ann_ivfpq" -> (Similarity.annIvfPqProd _),
-    "sim_ann_ivfpq_indexed" -> (Similarity.annIvfPqIndexedProd _),
-    "sim_ann_lsh_indexed" -> (Similarity.annLshIndexedProd _),
-    "sim_ann_lsh_capped_indexed" -> (Similarity.annLshCappedIndexedProd _),
-    "sim_ann_lsh_search" -> (Similarity.annLshSearchProd _),
-    "sim_ann_lsh_search_filtered" -> (Similarity.annLshSearchFilteredProd _),
-    "sim_ann_lsh_search_filtered_auto" ->
-      (Similarity.annLshSearchFilteredAutoProd _),
-    "sim_ann_lsh_search_filtered_auto_mid" ->
-      (Similarity.annLshSearchFilteredAutoMidProd _),
-    "sim_ann_lsh_index_delete" -> (Similarity.annLshIndexDeleteProd _),
-    "sim_ann_index_delta" -> (Similarity.annIvfPqIndexDeltaProd _),
-    "sim_ann_index_search" -> (Similarity.annIvfPqIndexSearchProd _),
-    "sim_ann_index_delete" -> (Similarity.annIvfPqIndexDeleteProd _),
-    "sim_ann_index_search_filtered" ->
-      (Similarity.annIvfPqIndexSearchFilteredProd _),
-    "sim_ann_lsh" -> (Similarity.annLshProd _),
-    "sim_ann_lsh_capped" -> (Similarity.annLshCappedProd _),
-    "sim_neardup_lsh" -> (Similarity.nearDupLshProd _),
-    "dedup_semantic" -> (Similarity.semanticDedupProd _),
-    "sketch_distinct_hll" -> (TextAnalysis.distinctHllProd _))
+    "events_value_quantiles" -> (Events.valueQuantilesApprox _))
 
   /** The PRODUCTION registry: every operator as a user would run it at
     * scale — no canonicalization, no global sort, no unbounded per-group
@@ -104,9 +79,10 @@ object SparkEntry {
   private def canonical(df: DataFrame): DataFrame =
     df.orderBy(df.columns.map(df.col).toIndexedSeq: _*)
 
-  /** One entry per implemented operator from SURVEY.md §2 — the
-    * ORACLE-exact forms, canonicalized for the driver's Verify/DuckDB
-    * hash compare. */
+  /** One entry per implemented operator from SURVEY.md §2 — the gated
+    * forms (the production form for every row outside
+    * [[productionOverrides]]), canonicalized for the Verify/DuckDB
+    * row-hash compare. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     oracleEntries.view.mapValues(fn =>
       (s: SparkSession, d: String) => canonical(fn(s, d))).toMap

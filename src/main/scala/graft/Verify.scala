@@ -18,6 +18,18 @@ object Verify {
     graft.sources.Tables.requiredConfs.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    try dump(spark, sfDir, outDir, only)
+    finally spark.stop()
+  }
+
+  /** Dump every [[SparkEntry.queries]] result (or the `only` subset, when
+    * non-empty) as `<outDir>/<name>` parquet plus `oracle_sql.json` —
+    * the input of the DuckDB compare (`tools/local_verify.py`). Runs on
+    * the caller's session and leaves it open. A failing
+    * query is reported on stderr and leaves no parquet, which the
+    * comparator then reports as missing. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      only: Set[String]): Unit = {
     // run the oracle gate THROUGH the whole-operator extension: every
     // ranked-window query executes on TopKPerKeyExec and must still
     // hash-match DuckDB
@@ -51,6 +63,5 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

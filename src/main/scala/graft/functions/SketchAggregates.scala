@@ -163,12 +163,12 @@ case class SimHashSketch(
   * production form, IVF centroid refinement). The aggregation buffer is
   * one fixed `Array[Double](dim)` regardless of group size, so a
   * billion-document language costs 64 doubles of state per partial —
-  * unlike the fold-exact oracle form, whose `collect_list` buffer grows
-  * with the group. Accumulation order follows partition order (floating
-  * point, so results can differ in the last ulp across runs); the
-  * fold-exact form remains the oracle gate, with spec-pinned 1e-9
-  * agreement (`ScaleSafetySpec`). Inputs shorter than `dim` contribute
-  * their prefix; null arrays are skipped. */
+  * unlike a fold-exact `collect_list` buffer, which grows with the
+  * group. Accumulation order follows partition order (floating point,
+  * so results can differ in the last ulp across runs); the DuckDB
+  * oracle replays a vec_id-ordered fold, and on the gated fixtures the
+  * two hash-match (`OracleGateSpec`). Inputs shorter than `dim`
+  * contribute their prefix; null arrays are skipped. */
 case class VectorSumSketch(
     child: Expression,
     dim: Int,

@@ -564,7 +564,7 @@ object Dedup {
   /** Connected components over ANY undirected pair frame `(a_id, b_id)`
     * covering the node frame `docs(doc_id)` — the shared core of
     * [[clusterAssign]] (minhash pairs) and
-    * [[Similarity.semanticDedup]] (embedding-cosine pairs). */
+    * [[Similarity.semanticDedupProd]] (embedding-cosine pairs). */
   private[operators] def connectedComponents(
       docs: DataFrame, pairs0: DataFrame): DataFrame =
     clusterAssignImpl(docs, pairs0)

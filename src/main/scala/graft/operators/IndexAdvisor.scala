@@ -49,7 +49,7 @@ final case class IndexRecommendation(
   *     bucketed table whose file names encode the bucket id, so the
   *     rename-based exactly-once append protocol does not transfer;
   *     the LSH artifact is rebuild-per-corpus-version
-  *     (`Similarity.buildLshIndex` scaladoc).
+  *     (`Similarity.buildLshIndexProd` scaladoc).
   *   - filtered workloads → whichever family's measured FILTERED point
   *     (both under their selectivity-scaled compensation dials) holds
   *     recall at the workload's scale; ties on recall (within 0.05) go

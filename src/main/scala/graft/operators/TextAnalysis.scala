@@ -722,7 +722,7 @@ object TextAnalysis {
   /** K-minimum-values distinct-count sketch over per-language word-3-gram
     * shingles — a DETERMINISTIC cardinality sketch (Spark's built-in
     * `approx_count_distinct` is not oracle-replayable; KMV with a pinned
-    * hash is, bit-for-bit — as is the replayable [[distinctHll]], which
+    * hash is, bit-for-bit — as is the replayable [[distinctHllProd]], which
     * trades KMV's exact-below-k fallback for a fixed 64-byte mergeable
     * buffer): keep the [[KmvK]] smallest distinct
     * `poly_hash(shingle)` values per language, estimate distinct count as
@@ -829,41 +829,17 @@ object TextAnalysis {
     * cardinality estimator alongside [[distinctKmv]] (KMV trades a
     * slightly larger summary for an exact-below-k fallback; HLL is the
     * fixed-64-byte mergeable form every streaming/OLAP engine ships).
-    * This ORACLE form computes registers relationally — (lang, bucket)
-    * max-aggregate, then the 64-slot vector assembled per language — so
-    * DuckDB replays every step bit-for-bit, including the estimate
-    * (see [[hllEstimated]] for why no step depends on fp ordering or
-    * transcendentals). [[distinctHllProd]] is the same pipeline on the
-    * native 64-byte [[graft.functions.HllRegisters]] buffer (ONE
-    * shuffle, max-merge); `SketchSpec` pins prod ≡ oracle exactly and
-    * the estimate within the theoretical error of the true count. */
-  def distinctHll(spark: SparkSession, dir: String): DataFrame = {
-    val withRho = hllHashedOf(Tables.documents(spark, dir))
-      .select(col("lang"),
-        (col("h") % HllM).as("bucket"),
-        shiftright(col("h"), 6).as("wv"))
-      .select(col("lang"), col("bucket"),
-        when(col("wv") === 0, lit((HllWBits + 1).toLong))
-          .otherwise(lit((HllWBits + 1).toLong) -
-            length(bin(col("wv"))).cast("long")).as("rho"))
-    val regs = withRho
-      .groupBy(col("lang"), col("bucket"))
-      .agg(max(col("rho")).as("reg"))
-      .groupBy(col("lang"))
-      .agg(map_from_entries(collect_list(struct(col("bucket"), col("reg"))))
-        .as("mp"))
-      .select(col("lang"),
-        transform(sequence(lit(0L), lit(63L)),
-          b => coalesce(element_at(col("mp"), b), lit(0L))).as("regs"))
-    hllEstimated(regs)
-  }
-
-  /** PRODUCTION HLL ([[graft.SparkEntry.productionOverrides]]): the
-    * native fixed-buffer register aggregate — one shuffle carrying 64
-    * bytes per language, the mergeable shape the streaming twin
-    * ([[graft.streaming.StreamingSketch]]) runs verbatim. Registers are
-    * a deterministic max, so this is value-IDENTICAL to the oracle
-    * form, not merely close (spec-pinned). */
+    * Registers build on the native fixed-buffer
+    * [[graft.functions.HllRegisters]] aggregate — one shuffle carrying
+    * 64 bytes per language, the mergeable shape the streaming twin
+    * ([[graft.streaming.StreamingSketch]]) runs verbatim. The DuckDB
+    * oracle computes the registers relationally — (lang, bucket)
+    * max-aggregate, then the 64-slot vector assembled per language — and
+    * replays every step bit-for-bit, including the estimate (see
+    * [[hllEstimated]] for why no step depends on fp ordering or
+    * transcendentals); registers are a deterministic max, so the two
+    * are value-IDENTICAL, not merely close. `CurationOpsSpec` pins the
+    * estimate within the theoretical error of the true count. */
   def distinctHllProd(spark: SparkSession, dir: String): DataFrame =
     hllEstimated(hllRegistersOf(hllHashedOf(Tables.documents(spark, dir))))
 
@@ -1628,7 +1604,7 @@ object TextAnalysis {
     "text_decontaminate_bloom" -> (decontaminateBloom _),
     "text_seq_pack" -> (seqPack _),
     "sketch_distinct_kmv" -> (distinctKmv _),
-    "sketch_distinct_hll" -> (distinctHll _),
+    "sketch_distinct_hll" -> (distinctHllProd _),
     "text_bigram_familiarity" -> (bigramFamiliarity _),
     "text_stratified_sample" -> (stratifiedSample _),
     "text_token_stats" -> (tokenStats _),

@@ -51,15 +51,9 @@ object Tables {
     *     filter dropped — it only pre-trims Generate input, it never
     *     changes output. Scale-independent: at 100 TB the duplicate
     *     evaluations are full corpus re-scans of the costliest scalar
-    *     work the pipeline does.
-    *     CAVEAT (round-17 ADVICE): `excludedRules` is a comma-separated
-    *     whole-value conf, not additive — applying this map OVERWRITES
-    *     any exclusion list supplied via spark-defaults/launcher flags
-    *     (and a later `spark.conf.set` overwrites this one). Every graft
-    *     entry point builds its own session from exactly this map, so
-    *     there is nothing to merge with today; a deployment that needs
-    *     its own exclusions must append this rule to its list rather
-    *     than rely on both surviving.
+    *     work the pipeline does. `excludedRules` is a whole-value
+    *     comma-separated list, so the rule is APPENDED to any list the
+    *     launcher supplied ([[excludedRules]]) rather than replacing it.
     *   - `canChangeCachedPlanOutputPartitioning` deliberately left at
     *     its default (false) — round 17 tried `true` (AQE coalescing of
     *     cached-plan partitions removes ~250 ms/task of block-manager
@@ -73,11 +67,22 @@ object Tables {
     *     session spreads to 59 s). Cached-partition counts here must
     *     follow the static parallelism knob, which the launcher already
     *     scales with the core count. */
-  val requiredConfs: Map[String, String] = Map(
+  def requiredConfs: Map[String, String] = Map(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "1000000",
-    "spark.sql.optimizer.excludedRules" ->
-      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+    "spark.sql.optimizer.excludedRules" -> excludedRules)
+
+  private val InferFiltersFromGenerate =
+    "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
+
+  /** The launcher's exclusion list (spark-submit `--conf` and
+    * spark-defaults reach the application JVM as `spark.*` system
+    * properties) with `InferFiltersFromGenerate` appended unless it is
+    * already there. Without a launcher list this is the rule alone. */
+  private def excludedRules: String =
+    (sys.props.get("spark.sql.optimizer.excludedRules").toSeq
+      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty) :+
+      InferFiltersFromGenerate).distinct.mkString(",")
 
   def part(spark: SparkSession, dir: String): DataFrame      = load(spark, dir, "part")
   def lineitem(spark: SparkSession, dir: String): DataFrame  = load(spark, dir, "lineitem")

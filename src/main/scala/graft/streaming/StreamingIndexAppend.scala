@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** STREAMING index maintenance — the continuous-ingest twin of the
   * persisted IVF-PQ index's delta append
-  * ([[graft.operators.Similarity.appendToIvfPqIndex]]): a crawl lands
+  * ([[graft.operators.Similarity.appendToIvfPqIndexProd]]): a crawl lands
   * embeddings on a stream, and every micro-batch is assigned to the
   * FROZEN centroids, encoded with the FROZEN codebook, and appended
   * into only its cells' postings partitions. The index artifact grows

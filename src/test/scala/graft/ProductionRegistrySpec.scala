@@ -34,6 +34,14 @@ class ProductionRegistrySpec extends AnyFunSuite {
       intersect SparkEntry.productionQueries.keySet).isEmpty)
   }
 
+  test("only the three by-design rows override the gated form") {
+    // every other row registers ONE form: the one Bench times is the one
+    // the DuckDB gate checks (OracleGateSpec). A new production twin must
+    // edit this set — and say why the gated form cannot be the timed one
+    assert(SparkEntry.productionOverrides.keySet == Set(
+      "events_value_quantiles", "text_inverted_index", "text_winnow_matches"))
+  }
+
   test("production plans carry no global Sort; oracle forms carry exactly one on top") {
     // representative spread: plain agg, join, LSH pipeline, window agg,
     // as-of join, range join, ranked top-k, IVF ANN

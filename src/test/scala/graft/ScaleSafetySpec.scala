@@ -6,11 +6,12 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The round-6 scale contract: NO query in the production registry may
-  * aggregate an unbounded per-group buffer. The three oracle forms that
-  * do (fold-exact centroid, unbounded postings, exact percentile) stay in
-  * the oracle registry only; their production substitutes
-  * (`SparkEntry.productionOverrides`) must agree with them on the
-  * fixtures — pinned here — while keeping fixed-size aggregation state.
+  * aggregate an unbounded per-group buffer. The three gated forms that
+  * do (unbounded postings, exact percentile, uncapped winnow
+  * fingerprints) stay in the oracle registry only; their production
+  * substitutes (`SparkEntry.productionOverrides`) must stay within a
+  * bracket of them on the fixtures — pinned here — while keeping
+  * fixed-size aggregation state.
   */
 class ScaleSafetySpec extends AnyFunSuite {
 
@@ -213,22 +214,6 @@ class ScaleSafetySpec extends AnyFunSuite {
     }
   }
 
-  test("production centroid agrees with the fold-exact oracle form to 1e-9") {
-    val exact = graft.operators.Similarity.centroidByLang(spark, dir)
-      .collect().map(r => (r.getString(0), r.getLong(1)) ->
-        (r.getDouble(2), r.getLong(3))).toMap
-    val prod = graft.operators.Similarity.centroidByLangProd(spark, dir)
-      .collect().map(r => (r.getString(0), r.getLong(1)) ->
-        (r.getDouble(2), r.getLong(3))).toMap
-    assert(prod.keySet == exact.keySet)
-    for ((k, (cProd, nProd)) <- prod) {
-      val (cExact, nExact) = exact(k)
-      assert(nProd == nExact, s"count mismatch at $k")
-      assert(math.abs(cProd - cExact) <= 1e-9,
-        s"centroid mismatch at $k: prod=$cProd exact=$cExact")
-    }
-  }
-
   test("production quantiles land within a ±2-rank-percent exact bracket") {
     import org.apache.spark.sql.functions.{col, expr}
     // approx_percentile returns an actual data value with bounded RANK
@@ -291,19 +276,11 @@ class ScaleSafetySpec extends AnyFunSuite {
       "fixture never exercised the df cap — raise sf or lower the cap")
   }
 
-  test("scan-side quantization equals the explode+join oracle form exactly") {
-    // same IEEE ops in the same order → bit-identical codes AND errors
-    val exact = graft.operators.Similarity.quantizeSq(spark, dir)
-      .collect().map(r => r.getLong(0) -> (r.getString(1), r.getDouble(2))).toMap
-    val prod = graft.operators.Similarity.quantizeSqProd(spark, dir)
-      .collect().map(r => r.getLong(0) -> (r.getString(1), r.getDouble(2))).toMap
-    assert(prod.keySet == exact.keySet && prod.nonEmpty)
-    for ((id, (codes, err)) <- prod) {
-      assert(codes == exact(id)._1, s"codes mismatch at vec $id")
-      assert(err == exact(id)._2, s"max_err mismatch at vec $id")
-    }
-    // and the production plan is explode/join/shuffle-free: a single
-    // project over the scan (plus the tiny stats job run beforehand)
+  test("scan-side quantization plan is explode-, join- and shuffle-free") {
+    // the codes and errors themselves are gated against the DuckDB
+    // replay (sim_quantize_sq, OracleGateSpec); this pins the plan: a
+    // single project over the scan (plus the tiny stats job run
+    // beforehand)
     val plan = graft.operators.Similarity.quantizeSqProd(spark, dir)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Generate") && !plan.contains("Exchange"), plan)

@@ -56,7 +56,7 @@ class AutoNprobeSpec extends AnyFunSuite {
     // fixed-knob answers exactly at the gate's scale
     val root = java.nio.file.Files.createTempDirectory("graft_autonp")
     try {
-      Similarity.buildIvfPqIndex(spark, dir, root.toString)
+      Similarity.buildIvfPqIndexProd(spark, dir, root.toString)
       val auto = Similarity.annIvfPqIndexed(spark, dir, root.toString)
         .collect().toSet
       val fixed = Similarity.annIvfPqIndexed(spark, dir, root.toString,
@@ -73,7 +73,7 @@ class AutoNprobeSpec extends AnyFunSuite {
     // where the fixed nprobe=8 filtered search measurably cannot
     val root = java.nio.file.Files.createTempDirectory("graft_autoflt")
     try {
-      Similarity.buildIvfPqIndex(spark, dir, root.toString)
+      Similarity.buildIvfPqIndexProd(spark, dir, root.toString)
       val dv = transform(col("embedding"), x => x.cast("double"))
       val e = graft.sources.Tables.embeddings(spark, dir)
         .select(col("vec_id"), dv.as("ev"))

@@ -81,14 +81,14 @@ class IndexConcurrencySpec extends AnyFunSuite {
       val e = graft.sources.Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"))
       val base = e.filter(col("vec_id") % 4 === 0)
-      Similarity.buildIvfPqIndexOn(spark, base, root)
+      Similarity.buildIvfPqIndexProdOn(spark, base, root)
       val d1 = e.filter(col("vec_id") % 4 === 1)
         .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
       val d2 = e.filter(col("vec_id") % 4 === 2)
         .select((col("vec_id") + 2000000L).as("vec_id"), col("embedding"))
       val outcomes = race(
-        () => Similarity.appendToIvfPqIndex(spark, d1, root, "crawl-a"),
-        () => Similarity.appendToIvfPqIndex(spark, d2, root, "crawl-b"))
+        () => Similarity.appendToIvfPqIndexProd(spark, d1, root, "crawl-a"),
+        () => Similarity.appendToIvfPqIndexProd(spark, d2, root, "crawl-b"))
       assert(outcomes.flatten.isEmpty,
         s"racing appends threw: ${outcomes.flatten.map(_.toString)}")
       val want = (base.select(col("vec_id")) union d1.select(col("vec_id"))
@@ -104,8 +104,8 @@ class IndexConcurrencySpec extends AnyFunSuite {
       assert(desc.getAs[Long]("committed_appends") == 2L)
       // sequential retries of both batches are byte-level no-ops
       val once = fileHashes(local)
-      Similarity.appendToIvfPqIndex(spark, d1, root, "crawl-a")
-      Similarity.appendToIvfPqIndex(spark, d2, root, "crawl-b")
+      Similarity.appendToIvfPqIndexProd(spark, d1, root, "crawl-a")
+      Similarity.appendToIvfPqIndexProd(spark, d2, root, "crawl-b")
       assert(fileHashes(local) == once, "a retried append mutated bytes")
       // no staging husk survives a committed batch
       assert(!java.nio.file.Files.exists(local.resolve("_append_staging"))
@@ -119,14 +119,14 @@ class IndexConcurrencySpec extends AnyFunSuite {
       val e = graft.sources.Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"))
       val base = e.filter(col("vec_id") % 4 =!= 3)
-      Similarity.buildIvfPqIndexOn(spark, base, root)
+      Similarity.buildIvfPqIndexProdOn(spark, base, root)
       val delta = e.filter(col("vec_id") % 4 === 3)
         .select((col("vec_id") + 3000000L).as("vec_id"), col("embedding"))
       val dead = base.filter(col("vec_id") % 10 === 6).select(col("vec_id"))
       val deadIds = dead.collect().map(_.getLong(0)).toSet
       assert(deadIds.nonEmpty)
       val outcomes = race(
-        () => Similarity.appendToIvfPqIndex(spark, delta, root, "crawl-c"),
+        () => Similarity.appendToIvfPqIndexProd(spark, delta, root, "crawl-c"),
         () => Similarity.deleteFromIvfPqIndex(spark, dead, root, "erase-1"))
       assert(outcomes.flatten.isEmpty,
         s"append∥delete threw: ${outcomes.flatten.map(_.toString)}")
@@ -150,7 +150,7 @@ class IndexConcurrencySpec extends AnyFunSuite {
       }
       // retries of both verbs are byte no-ops
       val once = fileHashes(local)
-      Similarity.appendToIvfPqIndex(spark, delta, root, "crawl-c")
+      Similarity.appendToIvfPqIndexProd(spark, delta, root, "crawl-c")
       Similarity.deleteFromIvfPqIndex(spark, dead, root, "erase-1")
       assert(fileHashes(local) == once, "a retried verb mutated bytes")
     } finally graft.streaming.StreamingStaging.deleteRecursively(local)
@@ -161,7 +161,7 @@ class IndexConcurrencySpec extends AnyFunSuite {
     try {
       val e = graft.sources.Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"))
-      Similarity.buildIvfPqIndexOn(spark, e, root)
+      Similarity.buildIvfPqIndexProdOn(spark, e, root)
       val dead1 = e.filter(col("vec_id") % 10 === 2).select(col("vec_id"))
       val dead1Ids = dead1.collect().map(_.getLong(0)).toSet
       val dead2 = e.filter(col("vec_id") % 10 === 7).select(col("vec_id"))
@@ -202,14 +202,14 @@ class IndexConcurrencySpec extends AnyFunSuite {
       val e = graft.sources.Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"))
       val base = e.filter(col("vec_id") % 4 === 0)
-      Similarity.buildIvfPqIndexOn(spark, base, root)
+      Similarity.buildIvfPqIndexProdOn(spark, base, root)
       val d1 = e.filter(col("vec_id") % 4 === 1)
         .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-      Similarity.appendToIvfPqIndex(spark, d1, root, "seed-1")
+      Similarity.appendToIvfPqIndexProd(spark, d1, root, "seed-1")
       val d2 = e.filter(col("vec_id") % 4 === 2)
         .select((col("vec_id") + 2000000L).as("vec_id"), col("embedding"))
       val outcomes = race(
-        () => Similarity.appendToIvfPqIndex(spark, d2, root, "race-b"),
+        () => Similarity.appendToIvfPqIndexProd(spark, d2, root, "race-b"),
         () => { Similarity.compactIvfPqIndex(spark, root,
           maxFilesPerCell = 0); () })
       // EXACTLY one winner: the sequenced lease totally orders the two
@@ -230,7 +230,7 @@ class IndexConcurrencySpec extends AnyFunSuite {
       // the loser retries SEQUENTIALLY and the artifact converges to
       // base + both deltas, fully compacted on the final pass
       if (outcomes(0).isDefined)
-        Similarity.appendToIvfPqIndex(spark, d2, root, "race-b")
+        Similarity.appendToIvfPqIndexProd(spark, d2, root, "race-b")
       Similarity.compactIvfPqIndex(spark, root, maxFilesPerCell = 0)
       val want = (base.select(col("vec_id")) union d1.select(col("vec_id"))
         union d2.select(col("vec_id"))).collect().map(_.getLong(0)).toSet
@@ -240,7 +240,7 @@ class IndexConcurrencySpec extends AnyFunSuite {
       assert(desc.getAs[Long]("committed_appends") == 2L)
       // retries of both verbs stay byte no-ops after the dust settles
       val once = fileHashes(local)
-      Similarity.appendToIvfPqIndex(spark, d2, root, "race-b")
+      Similarity.appendToIvfPqIndexProd(spark, d2, root, "race-b")
       assert(fileHashes(local) == once, "a retried append mutated bytes")
     } finally graft.streaming.StreamingStaging.deleteRecursively(local)
   }
@@ -251,12 +251,12 @@ class IndexConcurrencySpec extends AnyFunSuite {
       val e = graft.sources.Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"))
       val base = e.filter(col("vec_id") % 4 === 0)
-      Similarity.buildIvfPqIndexOn(spark, base, root)
+      Similarity.buildIvfPqIndexProdOn(spark, base, root)
       val delta = e.filter(col("vec_id") % 4 === 1)
         .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
       val outcomes = race(
-        () => Similarity.appendToIvfPqIndex(spark, delta, root, "dup-1"),
-        () => Similarity.appendToIvfPqIndex(spark, delta, root, "dup-1"))
+        () => Similarity.appendToIvfPqIndexProd(spark, delta, root, "dup-1"),
+        () => Similarity.appendToIvfPqIndexProd(spark, delta, root, "dup-1"))
       // the attempt guard admits exactly one in-flight attempt of a
       // batch id: one twin commits, the other fails LOUDLY (the old
       // failure mode was the loser's recovery sweep deleting files the
@@ -276,7 +276,7 @@ class IndexConcurrencySpec extends AnyFunSuite {
       assert(desc.getAs[Long]("committed_appends") == 1L)
       // the loser's sequential retry is the contract cadence: a no-op
       val once = fileHashes(local)
-      Similarity.appendToIvfPqIndex(spark, delta, root, "dup-1")
+      Similarity.appendToIvfPqIndexProd(spark, delta, root, "dup-1")
       assert(fileHashes(local) == once,
         "the sequential retry after losing the guard was not a no-op")
     } finally graft.streaming.StreamingStaging.deleteRecursively(local)
@@ -287,7 +287,7 @@ class IndexConcurrencySpec extends AnyFunSuite {
     try {
       val e = graft.sources.Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"))
-      Similarity.buildIvfPqIndexOn(spark, e, root)
+      Similarity.buildIvfPqIndexProdOn(spark, e, root)
       val dead = e.filter(col("vec_id") % 10 === 3).select(col("vec_id"))
       val deadIds = dead.collect().map(_.getLong(0)).toSet
       val outcomes = race(
@@ -321,21 +321,21 @@ class IndexConcurrencySpec extends AnyFunSuite {
     try {
       val e = graft.sources.Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"))
-      Similarity.buildIvfPqIndexOn(spark,
+      Similarity.buildIvfPqIndexProdOn(spark,
         e.filter(col("vec_id") % 4 === 0), root)
       val delta = e.filter(col("vec_id") % 4 === 1)
         .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
       // an attempt whose BODY throws (bad delta: missing column) must
       // release both lease files on the way out, not brick the index
       intercept[Throwable] {
-        Similarity.appendToIvfPqIndex(spark,
+        Similarity.appendToIvfPqIndexProd(spark,
           delta.select(col("vec_id")), root, "crash-1")
       }
       assert(!java.nio.file.Files.exists(local.resolve("_writer_leases"))
         || local.resolve("_writer_leases").toFile.list().isEmpty,
         "a failed attempt leaked its writer lease")
       // the sequential retry with the fixed delta commits normally
-      Similarity.appendToIvfPqIndex(spark, delta, root, "crash-1")
+      Similarity.appendToIvfPqIndexProd(spark, delta, root, "crash-1")
       val desc = Similarity.describeIndex(spark, root).head()
       assert(desc.getAs[Long]("committed_appends") == 1L)
     } finally graft.streaming.StreamingStaging.deleteRecursively(local)
@@ -346,9 +346,9 @@ class IndexConcurrencySpec extends AnyFunSuite {
     try {
       val e = graft.sources.Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"))
-      Similarity.buildIvfPqIndexOn(spark,
+      Similarity.buildIvfPqIndexProdOn(spark,
         e.filter(col("vec_id") % 4 === 0), root)
-      Similarity.appendToIvfPqIndex(spark,
+      Similarity.appendToIvfPqIndexProd(spark,
         e.filter(col("vec_id") % 4 === 1)
           .select((col("vec_id") + 1000000L).as("vec_id"),
             col("embedding")), root, "seed-1")
@@ -372,14 +372,14 @@ class IndexConcurrencySpec extends AnyFunSuite {
       val d2 = e.filter(col("vec_id") % 4 === 2)
         .select((col("vec_id") + 2000000L).as("vec_id"), col("embedding"))
       intercept[Similarity.IndexWriterContentionException] {
-        Similarity.appendToIvfPqIndex(spark, d2, root, "blocked-1")
+        Similarity.appendToIvfPqIndexProd(spark, d2, root, "blocked-1")
       }
       // a CRASHED writer's husk reclaims past the horizon — the next
       // sequential attempt self-heals instead of bricking the index
       spark.conf.set("graft.index.writerLeaseHorizonMs", "1")
       try {
         Thread.sleep(10L)
-        Similarity.appendToIvfPqIndex(spark, d2, root, "blocked-1")
+        Similarity.appendToIvfPqIndexProd(spark, d2, root, "blocked-1")
       } finally spark.conf.unset("graft.index.writerLeaseHorizonMs")
       val desc = Similarity.describeIndex(spark, root).head()
       assert(desc.getAs[Long]("committed_appends") == 2L,
@@ -392,10 +392,10 @@ class IndexConcurrencySpec extends AnyFunSuite {
     try {
       val e = graft.sources.Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"))
-      Similarity.buildIvfPqIndexOn(spark,
+      Similarity.buildIvfPqIndexProdOn(spark,
         e.filter(col("vec_id") % 4 =!= 3), s"$alias/v-001")
       Similarity.publishIndexVersion(spark, alias, "v-001")
-      Similarity.buildIvfPqIndexOn(spark,
+      Similarity.buildIvfPqIndexProdOn(spark,
         e.filter(col("vec_id") % 4 =!= 3), s"$alias/v-002")
       val batch = e.filter(col("vec_id") % 4 === 3)
         .select((col("vec_id") + 4000000L).as("vec_id"), col("embedding"))

@@ -31,7 +31,7 @@ class IndexLifecycleFuzzSpec extends AnyFunSuite {
       val e = graft.sources.Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"))
       val base = e.filter(col("vec_id") % 4 =!= 3)
-      Similarity.buildIvfPqIndexOn(spark, base, root.toString)
+      Similarity.buildIvfPqIndexProdOn(spark, base, root.toString)
 
       // the model: which vec_ids must be live / tombstoned
       var live = base.select(col("vec_id")).collect()
@@ -98,7 +98,7 @@ class IndexLifecycleFuzzSpec extends AnyFunSuite {
           case 0 => // append a fresh pool under an ambiguity-prone name
             val name = s"${batchNames(step % batchNames.size)}-a$step"
             val delta = pools(nextPool % pools.size); nextPool += 1
-            Similarity.appendToIvfPqIndex(spark, delta, root.toString, name)
+            Similarity.appendToIvfPqIndexProd(spark, delta, root.toString, name)
             val ids = delta.select(col("vec_id")).collect()
               .map(_.getLong(0)).toSet
             live ++= ids
@@ -109,7 +109,7 @@ class IndexLifecycleFuzzSpec extends AnyFunSuite {
               .select(col("seq")).head().getLong(0))
             // (d) the retry must be a byte-level no-op
             val once = fileHashes()
-            Similarity.appendToIvfPqIndex(spark, delta, root.toString, name)
+            Similarity.appendToIvfPqIndexProd(spark, delta, root.toString, name)
             assert(fileHashes() == once, s"[$step] retried append mutated")
           case 1 => // erase a random slice of the live set
             val name = s"${batchNames(step % batchNames.size)}-d$step"

@@ -8,11 +8,11 @@ import org.apache.spark.sql.functions.{col, input_file_name}
 
 import graft.TestSpark
 
-/** The build-once / query-many persisted IVF-PQ index: the exact-fold
-  * artifact must reproduce the in-query [[Similarity.annIvfPq]] row for
-  * row after its parquet round trip, the postings layout must turn a
-  * probe set into a partition-PRUNED read, and the production build
-  * (bounded trainers) must retain the exact form's answers. */
+/** The build-once / query-many persisted IVF-PQ index: the artifact
+  * must reproduce the in-query [[Similarity.annIvfPqProd]] row for row
+  * after its parquet round trip, the postings layout must turn a probe
+  * set into a partition-PRUNED read, and the whole append / delete /
+  * compact / alias lifecycle must keep its exactly-once guarantees. */
 class PersistedIndexSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -28,10 +28,10 @@ class PersistedIndexSpec extends AnyFunSuite {
   test("querying the persisted exact index reproduces annIvfPq row for row") {
     val root = tempRoot()
     try {
-      Similarity.buildIvfPqIndex(spark, dir, root.toString)
+      Similarity.buildIvfPqIndexProd(spark, dir, root.toString)
       val indexed = resultRows(
         Similarity.annIvfPqIndexed(spark, dir, root.toString))
-      val direct = resultRows(Similarity.annIvfPq(spark, dir))
+      val direct = resultRows(Similarity.annIvfPqProd(spark, dir))
       assert(direct.nonEmpty)
       assert(indexed == direct)
     } finally graft.streaming.StreamingStaging.deleteRecursively(root)
@@ -40,7 +40,7 @@ class PersistedIndexSpec extends AnyFunSuite {
   test("a probe set reads ONLY its cells' postings partitions") {
     val root = tempRoot()
     try {
-      Similarity.buildIvfPqIndex(spark, dir, root.toString)
+      Similarity.buildIvfPqIndexProd(spark, dir, root.toString)
       val postings = spark.read.parquet(s"$root/postings.parquet")
       val cells = postings.select(col("centroid_id").cast("long"))
         .distinct().orderBy(col("centroid_id")).limit(2)
@@ -80,10 +80,10 @@ class PersistedIndexSpec extends AnyFunSuite {
     val root = tempRoot()
     try {
       val e = graft.sources.Tables.embeddings(spark, dir)
-      Similarity.buildIvfPqIndexOn(spark, e.filter(col("vec_id") % 8 =!= 7),
+      Similarity.buildIvfPqIndexProdOn(spark, e.filter(col("vec_id") % 8 =!= 7),
         root.toString)
       val before = fileHashes(root)
-      Similarity.appendToIvfPqIndex(spark, e.filter(col("vec_id") % 8 === 7),
+      Similarity.appendToIvfPqIndexProd(spark, e.filter(col("vec_id") % 8 === 7),
         root.toString, "day1")
       val after = fileHashes(root)
       // every pre-existing artifact file — centroids, codebook, and every
@@ -118,13 +118,13 @@ class PersistedIndexSpec extends AnyFunSuite {
     try {
       val e = graft.sources.Tables.embeddings(spark, dir)
       val base = e.filter(col("vec_id") % 8 =!= 7)
-      Similarity.buildIvfPqIndexOn(spark, base, root1.toString)
-      Similarity.appendToIvfPqIndex(spark, e.filter(col("vec_id") % 8 === 7),
+      Similarity.buildIvfPqIndexProdOn(spark, base, root1.toString)
+      Similarity.appendToIvfPqIndexProd(spark, e.filter(col("vec_id") % 8 === 7),
         root1.toString, "all")
-      Similarity.buildIvfPqIndexOn(spark, base, root2.toString)
-      Similarity.appendToIvfPqIndex(spark, e.filter(col("vec_id") % 16 === 7),
+      Similarity.buildIvfPqIndexProdOn(spark, base, root2.toString)
+      Similarity.appendToIvfPqIndexProd(spark, e.filter(col("vec_id") % 16 === 7),
         root2.toString, "d1")
-      Similarity.appendToIvfPqIndex(spark, e.filter(col("vec_id") % 16 === 15),
+      Similarity.appendToIvfPqIndexProd(spark, e.filter(col("vec_id") % 16 === 15),
         root2.toString, "d2")
       val one = resultRows(Similarity.annIvfPqIndexed(spark, dir, root1.toString))
       val two = resultRows(Similarity.annIvfPqIndexed(spark, dir, root2.toString))
@@ -144,15 +144,15 @@ class PersistedIndexSpec extends AnyFunSuite {
     val root = tempRoot()
     try {
       val e = graft.sources.Tables.embeddings(spark, dir)
-      Similarity.buildIvfPqIndexOn(spark, e.filter(col("vec_id") % 8 =!= 7),
+      Similarity.buildIvfPqIndexProdOn(spark, e.filter(col("vec_id") % 8 =!= 7),
         root.toString)
       val delta = e.filter(col("vec_id") % 8 === 7)
-      Similarity.appendToIvfPqIndex(spark, delta, root.toString, "day1")
+      Similarity.appendToIvfPqIndexProd(spark, delta, root.toString, "day1")
       val once = fileHashes(root)
       val onceRows = resultRows(
         Similarity.annIvfPqIndexed(spark, dir, root.toString))
       // the driver retry: SAME delta, SAME batch id — must change nothing
-      Similarity.appendToIvfPqIndex(spark, delta, root.toString, "day1")
+      Similarity.appendToIvfPqIndexProd(spark, delta, root.toString, "day1")
       assert(fileHashes(root) == once,
         "a retried committed append modified the artifact")
       assert(resultRows(Similarity.annIvfPqIndexed(spark, dir, root.toString))
@@ -167,7 +167,7 @@ class PersistedIndexSpec extends AnyFunSuite {
       val e = graft.sources.Tables.embeddings(spark, dir)
       val base = e.filter(col("vec_id") % 8 =!= 7)
       val delta = e.filter(col("vec_id") % 8 === 7)
-      Similarity.buildIvfPqIndexOn(spark, base, root.toString)
+      Similarity.buildIvfPqIndexProdOn(spark, base, root.toString)
       // simulate the crash window the naive append+marker recipe loses:
       // some of batch day1's files were already renamed into the live
       // partitions, but the marker was never created. The orphan is a
@@ -194,13 +194,13 @@ class PersistedIndexSpec extends AnyFunSuite {
         cellDir.resolve("batch-day1-99.parquet"))
       // the retried append: recovery must drop the orphan, then publish
       // the batch exactly once
-      Similarity.appendToIvfPqIndex(spark, delta, root.toString, "day1")
+      Similarity.appendToIvfPqIndexProd(spark, delta, root.toString, "day1")
       assert(!java.nio.file.Files.exists(
         cellDir.resolve("batch-day1-99.parquet")),
         "recovery left the crashed attempt's orphan in place")
       // and the result equals a clean single append on a fresh artifact
-      Similarity.buildIvfPqIndexOn(spark, base, control.toString)
-      Similarity.appendToIvfPqIndex(spark, delta, control.toString, "day1")
+      Similarity.buildIvfPqIndexProdOn(spark, base, control.toString)
+      Similarity.appendToIvfPqIndexProd(spark, delta, control.toString, "day1")
       val got = resultRows(Similarity.annIvfPqIndexed(spark, dir, root.toString))
       val want = resultRows(
         Similarity.annIvfPqIndexed(spark, dir, control.toString))
@@ -216,12 +216,12 @@ class PersistedIndexSpec extends AnyFunSuite {
     val root = tempRoot()
     try {
       val e = graft.sources.Tables.embeddings(spark, dir)
-      Similarity.buildIvfPqIndexOn(spark, e.filter(col("vec_id") % 8 =!= 7),
+      Similarity.buildIvfPqIndexProdOn(spark, e.filter(col("vec_id") % 8 =!= 7),
         root.toString)
       // two "days" of appends → touched cells hold up to 3 files
-      Similarity.appendToIvfPqIndex(spark, e.filter(col("vec_id") % 16 === 7),
+      Similarity.appendToIvfPqIndexProd(spark, e.filter(col("vec_id") % 16 === 7),
         root.toString, "d1")
-      Similarity.appendToIvfPqIndex(spark, e.filter(col("vec_id") % 16 === 15),
+      Similarity.appendToIvfPqIndexProd(spark, e.filter(col("vec_id") % 16 === 15),
         root.toString, "d2")
       val before = fileHashes(root)
       val preQuery = resultRows(
@@ -259,7 +259,7 @@ class PersistedIndexSpec extends AnyFunSuite {
     val root = tempRoot()
     try {
       val e = graft.sources.Tables.embeddings(spark, dir)
-      Similarity.buildIvfPqIndexOn(spark, e.filter(col("vec_id") % 8 =!= 7),
+      Similarity.buildIvfPqIndexProdOn(spark, e.filter(col("vec_id") % 8 =!= 7),
         root.toString)
       // day 0, before any append: an empty report with the full schema,
       // not an AnalysisException — dashboards poll from the first build
@@ -268,7 +268,7 @@ class PersistedIndexSpec extends AnyFunSuite {
         "build_mean_cos", "drift", "batch_id", "seq"))
       assert(day0.count() == 0L)
       // batch 1: in-distribution (the held-out delta slice)
-      Similarity.appendToIvfPqIndex(spark, e.filter(col("vec_id") % 16 === 7),
+      Similarity.appendToIvfPqIndexProd(spark, e.filter(col("vec_id") % 16 === 7),
         root.toString, "d1")
       // batch 2: OUT of distribution — every dimension shifted, the
       // corpus-moved shape that should trigger a retrain (a different
@@ -279,7 +279,7 @@ class PersistedIndexSpec extends AnyFunSuite {
           transform(col("embedding"),
             x => (x + org.apache.spark.sql.functions.lit(0.6f)).cast("float"))
             .as("embedding"))
-      Similarity.appendToIvfPqIndex(spark, shifted, root.toString, "d2")
+      Similarity.appendToIvfPqIndexProd(spark, shifted, root.toString, "d2")
       val report = Similarity.indexDriftReport(spark, root.toString)
         .collect().map(r => r.getLong(0) ->
           (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
@@ -316,7 +316,7 @@ class PersistedIndexSpec extends AnyFunSuite {
     // random corpus offers nothing above ~0.55) — so a CORRECT index +
     // search must put the source vector at rank 1 for every query. This
     // is the interpretable end-to-end check the hash gate can't express.
-    val top1 = Similarity.annIvfPqIndexSearch(spark, dir)
+    val top1 = Similarity.annIvfPqIndexSearchProd(spark, dir)
       .filter(col("rnk") === 1).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(top1.nonEmpty)
@@ -333,7 +333,7 @@ class PersistedIndexSpec extends AnyFunSuite {
     val root = tempRoot()
     try {
       val e = graft.sources.Tables.embeddings(spark, dir)
-      Similarity.buildIvfPqIndex(spark, dir, root.toString)
+      Similarity.buildIvfPqIndexProd(spark, dir, root.toString)
       val before = resultRows(
         Similarity.annIvfPqIndexed(spark, dir, root.toString))
       // the erasure set must actually appear in the pre-delete answers,
@@ -375,7 +375,7 @@ class PersistedIndexSpec extends AnyFunSuite {
     val root = tempRoot()
     try {
       val e = graft.sources.Tables.embeddings(spark, dir)
-      Similarity.buildIvfPqIndex(spark, dir, root.toString)
+      Similarity.buildIvfPqIndexProd(spark, dir, root.toString)
       Similarity.deleteFromIvfPqIndex(spark,
         e.filter(col("vec_id") % 10 === 5).select(col("vec_id")),
         root.toString, "erasure-1")
@@ -406,7 +406,7 @@ class PersistedIndexSpec extends AnyFunSuite {
     val root = tempRoot()
     try {
       val e = graft.sources.Tables.embeddings(spark, dir)
-      Similarity.buildIvfPqIndex(spark, dir, root.toString)
+      Similarity.buildIvfPqIndexProd(spark, dir, root.toString)
       val postings = spark.read.parquet(s"$root/postings.parquet")
         .select(col("vec_id"), col("centroid_id").cast("long").as("cell"))
       // take down EVERY row of the two most populated cells, plus a
@@ -450,7 +450,7 @@ class PersistedIndexSpec extends AnyFunSuite {
   }
 
   test("filtered search: only allowed neighbors, dense ranks, de source at 1") {
-    val res = Similarity.annIvfPqIndexSearchFiltered(spark, dir).collect()
+    val res = Similarity.annIvfPqIndexSearchFilteredProd(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(res.nonEmpty)
     val allowed = graft.sources.Tables.documents(spark, dir)
@@ -485,14 +485,14 @@ class PersistedIndexSpec extends AnyFunSuite {
       val e = graft.sources.Tables.embeddings(spark, dir)
       // v1 = the day-0 index (base split); the full-corpus retrain ships
       // as v2 — the deploy the drift report's "retrain due" leads to
-      Similarity.buildIvfPqIndexOn(spark, e.filter(col("vec_id") % 8 =!= 7),
+      Similarity.buildIvfPqIndexProdOn(spark, e.filter(col("vec_id") % 8 =!= 7),
         s"$alias/v-001")
       Similarity.publishIndexVersion(spark, alias.toString, "v-001")
       assert(Similarity.resolveIndexAlias(spark, alias.toString)
         == s"$alias/v-001")
       val r1 = resultRows(Similarity.annIvfPqIndexed(spark, dir,
         Similarity.resolveIndexAlias(spark, alias.toString)))
-      Similarity.buildIvfPqIndex(spark, dir, s"$alias/v-002")
+      Similarity.buildIvfPqIndexProd(spark, dir, s"$alias/v-002")
       Similarity.publishIndexVersion(spark, alias.toString, "v-002")
       assert(Similarity.resolveIndexAlias(spark, alias.toString)
         == s"$alias/v-002")
@@ -500,7 +500,7 @@ class PersistedIndexSpec extends AnyFunSuite {
         Similarity.resolveIndexAlias(spark, alias.toString)))
       // the post-swap alias answers EXACTLY as the oracle-gated
       // full-corpus form — rotation is transitively under the hash gate
-      assert(r2 == resultRows(Similarity.annIvfPq(spark, dir)))
+      assert(r2 == resultRows(Similarity.annIvfPqProd(spark, dir)))
       // and the swap visibly changed the answer (the retrain landed)
       assert(r1 != r2)
       // publishing an incomplete artifact is refused loudly
@@ -530,7 +530,9 @@ class PersistedIndexSpec extends AnyFunSuite {
     val root = tempRoot()
     try {
       Similarity.buildIvfPqIndexProd(spark, dir, root.toString)
-      val exact = Similarity.annIvfPq(spark, dir).collect()
+      // the in-query form the DuckDB gate checks (sim_ann_ivfpq,
+      // OracleGateSpec) is the reference here
+      val exact = Similarity.annIvfPqProd(spark, dir).collect()
         .groupBy(_.getLong(0))
         .map { case (v, rs) => v -> rs.map(_.getLong(1)).toSet }
       val prod = Similarity.annIvfPqIndexed(spark, dir, root.toString)
@@ -538,13 +540,10 @@ class PersistedIndexSpec extends AnyFunSuite {
         .groupBy(_.getLong(0))
         .map { case (v, rs) => v -> rs.map(_.getLong(1)).toSet }
       assert(exact.nonEmpty)
-      // prod training's fixed-buffer sums are last-ulp order-dependent
-      // (can flip a near-tie cell/code assignment), so pin retention,
-      // not equality — same caveat as the other prod variants
       val retention = exact.map { case (v, ex) =>
         (ex intersect prod.getOrElse(v, Set.empty)).size.toDouble / ex.size
       }.sum / exact.size
-      info(f"persisted-prod retention vs exact annIvfPq: $retention%.3f")
+      info(f"persisted-prod retention vs in-query annIvfPqProd: $retention%.3f")
       assert(retention >= 0.9,
         f"production index lost too much: $retention%.3f (floor 0.9)")
     } finally graft.streaming.StreamingStaging.deleteRecursively(root)
@@ -558,7 +557,7 @@ class PersistedIndexSpec extends AnyFunSuite {
     val root = tempRoot()
     try {
       val e = graft.sources.Tables.embeddings(spark, dir)
-      Similarity.buildIvfPqIndex(spark, dir, root.toString)
+      Similarity.buildIvfPqIndexProd(spark, dir, root.toString)
       Similarity.deleteFromIvfPqIndex(spark,
         e.filter(col("vec_id") % 10 === 5).select(col("vec_id")),
         root.toString, "takedown-2026-08-15")
@@ -590,7 +589,7 @@ class PersistedIndexSpec extends AnyFunSuite {
     val root = tempRoot()
     try {
       val e = graft.sources.Tables.embeddings(spark, dir)
-      Similarity.buildIvfPqIndex(spark, dir, root.toString)
+      Similarity.buildIvfPqIndexProd(spark, dir, root.toString)
       val before = resultRows(
         Similarity.annIvfPqIndexed(spark, dir, root.toString))
       // crash window 1: mkdirs(tombstones.parquet) happened, no file
@@ -703,8 +702,8 @@ class PersistedIndexSpec extends AnyFunSuite {
     try {
       val e = graft.sources.Tables.embeddings(spark, dir)
       val base = e.filter(col("vec_id") % 8 =!= 7)
-      Similarity.buildIvfPqIndexOn(spark, base, root.toString)
-      Similarity.appendToIvfPqIndex(spark, e.filter(col("vec_id") % 8 === 7),
+      Similarity.buildIvfPqIndexProdOn(spark, base, root.toString)
+      Similarity.appendToIvfPqIndexProd(spark, e.filter(col("vec_id") % 8 === 7),
         root.toString, "day1")
       val ids = e.filter(col("vec_id") % 10 === 5).select(col("vec_id"))
       Similarity.deleteFromIvfPqIndex(spark, ids, root.toString, "erasure-1")
@@ -732,7 +731,7 @@ class PersistedIndexSpec extends AnyFunSuite {
   test("the recall canary scores the live index against exact ground truth") {
     val root = tempRoot()
     try {
-      Similarity.buildIvfPqIndex(spark, dir, root.toString)
+      Similarity.buildIvfPqIndexProd(spark, dir, root.toString)
       val row = Similarity.indexRecallProbe(spark, dir, root.toString).head()
       val n = graft.sources.Tables.embeddings(spark, dir).count()
       assert(row.getAs[Long]("n_vectors") == n)
@@ -755,7 +754,7 @@ class PersistedIndexSpec extends AnyFunSuite {
     val root = tempRoot()
     try {
       val e = graft.sources.Tables.embeddings(spark, dir)
-      Similarity.buildIvfPqIndexOn(spark, e.filter(col("vec_id") % 8 < 6),
+      Similarity.buildIvfPqIndexProdOn(spark, e.filter(col("vec_id") % 8 < 6),
         root.toString)
       // a concurrent writer already claimed seq 0 (its marker may land
       // later or never) — this append must observe the claim and mint
@@ -763,7 +762,7 @@ class PersistedIndexSpec extends AnyFunSuite {
       val ifs = graft.sources.IndexFs.on(spark, root.toString)
       ifs.createUtf8(ifs.child("_append_log", "ord-000000000000"),
         "some-other-batch")
-      Similarity.appendToIvfPqIndex(spark, e.filter(col("vec_id") % 8 === 6),
+      Similarity.appendToIvfPqIndexProd(spark, e.filter(col("vec_id") % 8 === 6),
         root.toString, "day1")
       val report = Similarity.indexDriftReport(spark, root.toString)
         .select(col("batch_id"), col("seq")).collect()
@@ -771,12 +770,12 @@ class PersistedIndexSpec extends AnyFunSuite {
       assert(report.toSeq == Seq(("day1", 1L)),
         s"raced append minted the wrong seq: ${report.toSeq}")
       // the retried append reuses the seq it already owns
-      Similarity.appendToIvfPqIndex(spark, e.filter(col("vec_id") % 8 === 6),
+      Similarity.appendToIvfPqIndexProd(spark, e.filter(col("vec_id") % 8 === 6),
         root.toString, "day1")
       assert(Similarity.indexDriftReport(spark, root.toString)
         .select(col("seq")).collect().map(_.getLong(0)).toSeq == Seq(1L))
       // and the next batch continues past both claims
-      Similarity.appendToIvfPqIndex(spark, e.filter(col("vec_id") % 8 === 7),
+      Similarity.appendToIvfPqIndexProd(spark, e.filter(col("vec_id") % 8 === 7),
         root.toString, "day2")
       assert(Similarity.indexDriftReport(spark, root.toString)
         .select(col("batch_id"), col("seq")).collect()

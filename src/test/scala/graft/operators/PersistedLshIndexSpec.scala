@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions.col
 
 import graft.TestSpark
 
-/** The persisted LSH index (query-throughput artifact): the exact-fold
-  * build must reproduce the in-query [[Similarity.annLsh]] row for row
+/** The persisted LSH index (query-throughput artifact): the build must
+  * reproduce the in-query [[Similarity.annLshProd]] row for row
   * after its parquet/bucketed-table round trip, the postings side of
   * the candidate join must read the bucketed layout EXCHANGE-FREE (the
   * whole point — the in-query form shuffles the postings every call),
@@ -23,8 +23,8 @@ class PersistedLshIndexSpec extends AnyFunSuite {
       r.getDouble(4))).toSet
 
   test("querying the persisted exact LSH index reproduces annLsh row for row") {
-    val indexed = rows(Similarity.annLshIndexedAuto(spark, dir))
-    val direct = rows(Similarity.annLsh(spark, dir))
+    val indexed = rows(Similarity.annLshIndexedProd(spark, dir))
+    val direct = rows(Similarity.annLshProd(spark, dir))
     assert(direct.nonEmpty)
     assert(indexed == direct)
   }
@@ -32,12 +32,12 @@ class PersistedLshIndexSpec extends AnyFunSuite {
   test("the bucket_rank cap knob reproduces the in-query capped form row for row") {
     // same artifact, capped query: the build-stamped LCG rank must select
     // the SAME per-bucket sample the in-query capped form computes
-    val indexed = rows(Similarity.annLshCappedIndexedAuto(spark, dir))
-    val direct = rows(Similarity.annLshCapped(spark, dir))
+    val indexed = rows(Similarity.annLshCappedIndexedProd(spark, dir))
+    val direct = rows(Similarity.annLshCappedProd(spark, dir))
     assert(direct.nonEmpty)
     assert(indexed == direct)
     // and the knob genuinely changes the result at this fixture's skew
-    assert(indexed != rows(Similarity.annLshIndexedAuto(spark, dir)))
+    assert(indexed != rows(Similarity.annLshIndexedProd(spark, dir)))
   }
 
   test("a pre-bucket_rank artifact serves uncapped queries; capped fails loudly") {
@@ -50,7 +50,7 @@ class PersistedLshIndexSpec extends AnyFunSuite {
     val newT = s"graft_lshrank_new_$tag"
     val oldT = s"graft_lshrank_old_$tag"
     try {
-      Similarity.buildLshIndex(spark, dir, s"$root/new", newT)
+      Similarity.buildLshIndexProd(spark, dir, s"$root/new", newT)
       spark.read.parquet(s"$root/new/meta.parquet")
         .write.parquet(s"$root/old/meta.parquet")
       spark.read.parquet(s"$root/new/codebook.parquet")
@@ -58,7 +58,7 @@ class PersistedLshIndexSpec extends AnyFunSuite {
       graft.sources.Layouts.writeBucketedOn(
         spark.table(newT).drop("bucket_rank"), oldT, s"$root/old/postings",
         Seq("bucket"), 32)
-      val direct = rows(Similarity.annLsh(spark, dir))
+      val direct = rows(Similarity.annLshProd(spark, dir))
       assert(rows(Similarity.annLshIndexed(spark, dir, oldT)) == direct,
         "uncapped query against a rank-less artifact diverged (or failed)")
       val err = intercept[IllegalArgumentException] {
@@ -77,7 +77,7 @@ class PersistedLshIndexSpec extends AnyFunSuite {
     val t = s"graft_lshdel_${java.lang.Long.toHexString(System.nanoTime())}"
     try {
       val e = graft.sources.Tables.embeddings(spark, dir)
-      Similarity.buildLshIndex(spark, dir, s"$root/idx", t)
+      Similarity.buildLshIndexProd(spark, dir, s"$root/idx", t)
       val before = rows(Similarity.annLshIndexed(spark, dir, t))
       assert(before.exists(_._1 % 10 == 5) && before.exists(_._2 % 10 == 5))
       val ids = e.filter(col("vec_id") % 10 === 5).select(col("vec_id"))
@@ -105,7 +105,7 @@ class PersistedLshIndexSpec extends AnyFunSuite {
       // the LSH family's physical purge is the rebuild: a fresh build of
       // the same artifact resets the erasure list (the new version
       // re-encodes whatever source it was given)
-      Similarity.buildLshIndex(spark, dir, s"$root/idx", t)
+      Similarity.buildLshIndexProd(spark, dir, s"$root/idx", t)
       assert(rows(Similarity.annLshIndexed(spark, dir, t)) == before,
         "rebuild carried the old erasure list into the new version")
     } finally {
@@ -116,23 +116,31 @@ class PersistedLshIndexSpec extends AnyFunSuite {
 
   test("the candidate join's postings side is exchange-free (bucketed scan)") {
     val saved = spark.conf.get("spark.sql.adaptive.enabled")
+    val savedBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
+    // at 100 TB nothing broadcasts: plan every join exchange-backed, so
+    // the count below compares what each form moves through its joins
+    // (at fixture size both forms broadcast every join and tie)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val indexed = Similarity.annLshIndexedAuto(spark, dir)
-      val inQuery = Similarity.annLsh(spark, dir)
+      val indexed = Similarity.annLshIndexedProd(spark, dir)
+      val inQuery = Similarity.annLshProd(spark, dir)
       val iPlan = indexed.queryExecution.executedPlan.toString
       val qPlan = inQuery.queryExecution.executedPlan.toString
       // the postings scan is a bucketed read...
       assert(iPlan.contains("Bucketed: true"), iPlan)
       // ...and the probe side's shuffle is the only NEW exchange the big
       // join needs: the persisted form's total shuffle count drops below
-      // the in-query form's (which pays exchanges for signature+code
-      // computation AND moves the postings through its candidate join)
+      // the in-query form's (which moves the postings through its
+      // candidate join and re-attaches the codes with a second join)
       val iShuffles = graft.PlanAudit.shuffleCount(iPlan)
       val qShuffles = graft.PlanAudit.shuffleCount(qPlan)
       assert(iShuffles < qShuffles,
         s"indexed=$iShuffles !< in-query=$qShuffles\n$iPlan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", saved)
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", saved)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", savedBroadcast)
+    }
   }
 
   test("external-query search retrieves the source vector for nearly every query") {
@@ -144,7 +152,7 @@ class PersistedLshIndexSpec extends AnyFunSuite {
     // set by construction — so the contract is a high floor, not 100%.
     // Exactness of the whole algorithm is the DuckDB oracle's job
     // (sim_ann_lsh_search hash-gates every candidate/rank).
-    val top1 = Similarity.annLshSearch(spark, dir)
+    val top1 = Similarity.annLshSearchProd(spark, dir)
       .filter(col("rnk") === 1).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val nQueries = graft.sources.Tables.embeddings(spark, dir)
@@ -160,7 +168,7 @@ class PersistedLshIndexSpec extends AnyFunSuite {
   test("filtered LSH search: only allowed neighbors, dense ranks, de source at 1") {
     // API parity with the IVF-PQ artifact's filtered search — same
     // pre-filter semantics, same registry slice (documents.lang = 'de')
-    val res = Similarity.annLshSearchFiltered(spark, dir).collect()
+    val res = Similarity.annLshSearchFilteredProd(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(res.nonEmpty)
     val allowed = graft.sources.Tables.documents(spark, dir)
@@ -191,7 +199,7 @@ class PersistedLshIndexSpec extends AnyFunSuite {
     val t = s"graft_lshdesc_${java.lang.Long.toHexString(System.nanoTime())}"
     try {
       val e = graft.sources.Tables.embeddings(spark, dir)
-      Similarity.buildLshIndex(spark, dir, s"$root/idx", t)
+      Similarity.buildLshIndexProd(spark, dir, s"$root/idx", t)
       val ids = e.filter(col("vec_id") % 10 === 5).select(col("vec_id"))
       Similarity.deleteFromLshIndex(spark, ids, t, "erasure-1")
       val row = Similarity.describeLshIndex(spark, t).head()
@@ -223,7 +231,7 @@ class PersistedLshIndexSpec extends AnyFunSuite {
     // build into a known root so the table/artifact pair is inspectable
     val root = java.nio.file.Files.createTempDirectory("graft_lshidx_spec")
     try {
-      Similarity.buildLshIndex(spark, dir, root.toString,
+      Similarity.buildLshIndexProd(spark, dir, root.toString,
         "graft_lshidx_spec_table")
       val postings = spark.table("graft_lshidx_spec_table")
       assert(postings.schema.fieldNames.toSet ==

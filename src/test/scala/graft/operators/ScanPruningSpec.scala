@@ -48,7 +48,7 @@ class ScanPruningSpec extends AnyFunSuite {
   }
 
   test("embeddings ANN scans prune to (vec_id, embedding)") {
-    val p = plan(Similarity.annLsh(spark, dir))
+    val p = plan(Similarity.annLshProd(spark, dir))
     assert(p.contains("ReadSchema: struct<vec_id:bigint,embedding:array<float>>"), p)
   }
 

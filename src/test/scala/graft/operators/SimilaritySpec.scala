@@ -22,7 +22,7 @@ class SimilaritySpec extends AnyFunSuite {
   test("LSH near-dup recalls the exact cosine pair set (recall 1.0 on fixtures)") {
     val exact = Similarity.cosineNearDup(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lsh = Similarity.nearDupLsh(spark, dir).collect()
+    val lsh = Similarity.nearDupLshProd(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact.nonEmpty)
     assert(lsh == exact)
@@ -36,7 +36,7 @@ class SimilaritySpec extends AnyFunSuite {
     // whose exact cosine is JUST above 0.9 (copy = x + 0.44·y mixes in an
     // unrelated vector — the worst realistic quantization-error case: the
     // perturbation is spread over EVERY dimension, not 8), train the PQ
-    // codebook on that union exactly as nearDupLsh does, and assert no
+    // codebook on that union exactly as the oracle replay does, and assert no
     // true pair's code-vs-code decoded cosine falls below the margin —
     // i.e. the prefilter provably cannot drop a borderline true pair.
     import org.apache.spark.sql.functions._
@@ -62,9 +62,9 @@ class SimilaritySpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0))
     assert(planted.length >= 10,
       s"fixture produced only ${planted.length} borderline pairs — retune the mix")
-    // train the codebook on the union (the nearDupLsh exact path's own
-    // trainer) and decode each planted pair symmetrically
-    val cbArr = Similarity.pqCodebookArrOf(Similarity.pqCodebookExactOn(v))
+    // train the codebook on the union (the oracle replay's training set)
+    // and decode each planted pair symmetrically
+    val cbArr = Similarity.pqCodebookProdOn(v)
     def worstOf(cb: Array[Array[Array[Double]]]): Double = {
       val codes = union.select(col("vec_id"),
         graft.functions.VectorFunctions.pq_assign(col("embedding"), cb, 4)
@@ -83,8 +83,8 @@ class SimilaritySpec extends AnyFunSuite {
     // the BASE corpus only (never sees the near-dup copies), so pair
     // members reconstruct with out-of-sample error — the margin must
     // hold there too, or the prod prefilter drops what the exact one keeps
-    val worstBase = worstOf(Similarity.pqCodebookArrOf(
-      Similarity.pqCodebookExactOn(v.filter(col("vec_id") < 200000L))))
+    val worstBase = worstOf(
+      Similarity.pqCodebookProdOn(v.filter(col("vec_id") < 200000L)))
     info(f"borderline pairs: ${planted.length}; worst decoded cosine " +
       f"$worst%.3f (union-trained) / $worstBase%.3f (base-trained) vs " +
       f"margin ${Similarity.NearDupPqMargin}")
@@ -94,27 +94,8 @@ class SimilaritySpec extends AnyFunSuite {
           f"$w%.3f <= ${Similarity.NearDupPqMargin} and would be silently dropped")
   }
 
-  test("production near-dup (fixed-buffer PQ prefilter) equals the oracle pair set") {
-    // the prod codebook differs from the oracle's (base-trained,
-    // fixed-buffer accumulation) so the prefilter decisions could in
-    // principle diverge — the 0.5 margin's moat (planted pairs decode to
-    // approx cosine ≈ 1, incidental candidates ≲ 0.55) makes both
-    // variants keep exactly the true pair set on the fixtures
-    val oracle = Similarity.nearDupLsh(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val prod = Similarity.nearDupLshProd(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(oracle.nonEmpty)
-    assert(prod == oracle)
-    val semOracle = Similarity.semanticDedup(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    val semProd = Similarity.semanticDedupProd(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    assert(semProd == semOracle)
-  }
-
   test("semantic dedup clusters every planted copy with its original") {
-    val rows = Similarity.semanticDedup(spark, dir).collect()
+    val rows = Similarity.semanticDedupProd(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
     val byId = rows.map(t => t._1 -> t).toMap
     val planted = rows.filter(_._1 >= 100000L)
@@ -135,7 +116,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("ANN candidates are exact-cosine ranked per query") {
-    val rows = Similarity.annLsh(spark, dir).collect()
+    val rows = Similarity.annLshProd(spark, dir).collect()
     assert(rows.nonEmpty)
     // per vec_id: ranks are 1..k and cosine non-increasing with rank
     rows.groupBy(_.getLong(0)).foreach { case (_, rs) =>
@@ -149,10 +130,8 @@ class SimilaritySpec extends AnyFunSuite {
   test("IVF ANN recall@3 vs exact top-k has a pinned floor, both variants") {
     // Random vectors are the worst case for ANY coarse quantizer (no
     // cluster structure to exploit). With the one-iteration Lloyd
-    // refinement both variants (fold-exact oracle / vector-sum
-    // production) must hold the floor; they may differ slightly from
-    // each other because last-ulp sum differences can flip near-tie cell
-    // assignments. The refinement lifted measured recall 0.64 -> 0.743
+    // refinement the registry form must hold the floor. The refinement
+    // lifted measured recall 0.64 -> 0.743
     // (sf0.001) even on this unclustered worst case; floor 0.65 pins the
     // gain against silent k/nprobe/refinement regressions. On clustered
     // corpora IVF recall is far higher at the same probe budget.
@@ -168,23 +147,20 @@ class SimilaritySpec extends AnyFunSuite {
         (ex intersect ivf.getOrElse(v, Set.empty)).size.toDouble / ex.size
       }.sum / exact.size
     }
-    val oracleRecall = recallOf(Similarity.annIvf(spark, dir))
     val prodRecall = recallOf(Similarity.annIvfProd(spark, dir))
-    info(f"IVF recall@$k: oracle=$oracleRecall%.3f production=$prodRecall%.3f")
-    assert(oracleRecall >= 0.65,
-      f"IVF oracle recall@$k degraded to $oracleRecall%.3f (floor 0.65)")
+    info(f"IVF recall@$k: $prodRecall%.3f")
     assert(prodRecall >= 0.65,
       f"IVF production recall@$k degraded to $prodRecall%.3f (floor 0.65)")
   }
 
   test("SQ-reranked IVF retains (nearly all of) the un-quantized IVF's answers") {
     // the int8 preselect (top-12 by decoded cosine) must not lose what
-    // the full-precision candidate ranking finds: recall of annIvfSq's
-    // top-3 AGAINST annIvf's top-3 — quantization is the only difference,
-    // so this isolates the SQ error from the IVF probe loss
-    val ivf = Similarity.annIvf(spark, dir).collect()
+    // the full-precision candidate ranking finds: recall of annIvfSqProd's
+    // top-3 AGAINST annIvfProd's top-3 — quantization is the only
+    // difference, so this isolates the SQ error from the IVF probe loss
+    val ivf = Similarity.annIvfProd(spark, dir).collect()
       .groupBy(_.getLong(0)).map { case (v, rs) => v -> rs.map(_.getLong(1)).toSet }
-    val sq = Similarity.annIvfSq(spark, dir).collect()
+    val sq = Similarity.annIvfSqProd(spark, dir).collect()
       .groupBy(_.getLong(0)).map { case (v, rs) => v -> rs.map(_.getLong(1)).toSet }
     assert(ivf.nonEmpty)
     val retention = ivf.map { case (v, ex) =>
@@ -193,30 +169,16 @@ class SimilaritySpec extends AnyFunSuite {
     info(f"SQ retention vs un-quantized IVF: $retention%.3f")
     assert(retention >= 0.9,
       f"SQ rerank lost too much vs full precision: $retention%.3f (floor 0.9)")
-    // and the production (vector-sum Lloyd) variant returns results too
-    assert(Similarity.annIvfSqProd(spark, dir).collect().nonEmpty)
   }
 
-  test("PQ production codes agree with the fold-exact oracle form") {
-    // the scan-side argmin against codebook literals vs the explode/join
-    // oracle: identical algorithm, but the production codebook's
-    // fixed-buffer cell sums are last-ulp order-dependent, which can
-    // flip a near-tie subspace assignment — so pin a high agreement
-    // fraction, not equality (same caveat as the IVF variants)
-    val exact = Similarity.quantizePq(spark, dir).collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
+  test("PQ production codes are 4-bit and come from one scan-side projection") {
+    // the codes themselves are gated against the DuckDB replay
+    // (sim_quantize_pq, OracleGateSpec); this pins the shape
     val prod = Similarity.quantizePqProd(spark, dir).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(prod.keySet == exact.keySet && prod.nonEmpty)
-    val positions = exact.keys.toSeq.flatMap { id =>
-      exact(id).split(',').zip(prod(id).split(','))
-    }
-    val agree = positions.count { case (a, b) => a == b }.toDouble / positions.size
-    info(f"PQ prod/oracle code agreement: $agree%.4f over ${positions.size} positions")
-    assert(agree >= 0.98,
-      f"PQ production codes diverged from the oracle: $agree%.4f (floor 0.98)")
+    assert(prod.nonEmpty)
     // code alphabet sanity: every code is a valid 4-bit index
-    exact.values.foreach(_.split(',').foreach { c =>
+    prod.values.foreach(_.split(',').foreach { c =>
       assert(c.toInt >= 0 && c.toInt < 16, s"code $c outside [0, 16)")
     })
     // and the production plan is the PQ promise: one scan-side
@@ -230,9 +192,9 @@ class SimilaritySpec extends AnyFunSuite {
     // asymmetric-distance preselect over 4-byte codes (16x smaller than
     // the SQ candidate payload) must still not lose what full precision
     // finds; same isolation as the SQ retention test
-    val ivf = Similarity.annIvf(spark, dir).collect()
+    val ivf = Similarity.annIvfProd(spark, dir).collect()
       .groupBy(_.getLong(0)).map { case (v, rs) => v -> rs.map(_.getLong(1)).toSet }
-    val pq = Similarity.annIvfPq(spark, dir).collect()
+    val pq = Similarity.annIvfPqProd(spark, dir).collect()
       .groupBy(_.getLong(0)).map { case (v, rs) => v -> rs.map(_.getLong(1)).toSet }
     assert(ivf.nonEmpty)
     val retention = ivf.map { case (v, ex) =>
@@ -241,8 +203,6 @@ class SimilaritySpec extends AnyFunSuite {
     info(f"PQ retention vs un-quantized IVF: $retention%.3f")
     assert(retention >= 0.8,
       f"PQ rerank lost too much vs full precision: $retention%.3f (floor 0.8)")
-    // and the production (scan-side decode) variant returns results too
-    assert(Similarity.annIvfPqProd(spark, dir).collect().nonEmpty)
   }
 
   test("ANN recall@3 vs exact top-k has a pinned floor (measured ~0.81)") {
@@ -255,7 +215,7 @@ class SimilaritySpec extends AnyFunSuite {
     val exact = Similarity.cosineTopK(spark, dir).collect()
       .filter(_.getLong(2) <= k)
       .groupBy(_.getLong(0)).map { case (v, rs) => v -> rs.map(_.getLong(1)).toSet }
-    val ann = Similarity.annLsh(spark, dir).collect()
+    val ann = Similarity.annLshProd(spark, dir).collect()
       .groupBy(_.getLong(0)).map { case (v, rs) => v -> rs.map(_.getLong(1)).toSet }
     assert(exact.nonEmpty)
     val recall = exact.map { case (v, ex) =>
@@ -267,8 +227,8 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("bucket-capped LSH: the cap binds, recall loss is bounded, prod agrees") {
     val k = 3
-    val capped = Similarity.annLshCapped(spark, dir).collect()
-    val uncapped = Similarity.annLsh(spark, dir).collect()
+    val capped = Similarity.annLshCappedProd(spark, dir).collect()
+    val uncapped = Similarity.annLshProd(spark, dir).collect()
     // occupancy reconstructed from the output's own (query, bucket)
     // assignment: the fixture genuinely exercises the cap — hot buckets
     // exceed it (the synthetic embeddings are NOT uniform over buckets)
@@ -293,12 +253,7 @@ class SimilaritySpec extends AnyFunSuite {
     }.sum / exact.size
     info(f"capped-LSH recall@$k: $recall%.3f (uncapped floor is 0.75)")
     assert(recall >= 0.65, f"capped recall@$k degraded to $recall%.3f (floor 0.65)")
-    // production twin (fixed-buffer codebook, native scan-side codes)
-    // returns the identical pair set: codebook differences move only the
-    // asymmetric PRESELECT margin, and the full-precision rerank washes
-    // preselect-order differences out on these fixtures
-    val prod = Similarity.annLshCappedProd(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(prod == cappedPairs)
+    // the capped row's agreement with its DuckDB replay is gated in
+    // OracleGateSpec (sim_ann_lsh_capped)
   }
 }

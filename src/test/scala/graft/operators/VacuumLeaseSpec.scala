@@ -25,7 +25,7 @@ class VacuumLeaseSpec extends AnyFunSuite {
 
   private def buildVersion(alias: String, v: String,
       mod: Int): Unit =
-    Similarity.buildIvfPqIndexOn(spark,
+    Similarity.buildIvfPqIndexProdOn(spark,
       graft.sources.Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"))
         .filter(col("vec_id") % 8 =!= mod),

@@ -92,14 +92,14 @@ class IndexFsSpec extends AnyFunSuite {
     try {
       val dir = graft.TestSpark.sfDir
       val e = Tables.embeddings(spark, dir)
-      Similarity.buildIvfPqIndexOn(spark,
+      Similarity.buildIvfPqIndexProdOn(spark,
         e.filter(col("vec_id") % 8 =!= 7), root)
       assert(GraftTestFs.ops.get() > 0L,
         "no traffic routed through the graftfs scheme — scheme not exercised")
       // day 0: the no-appends guard must consult the graftfs store
       assert(Similarity.indexDriftReport(spark, root).count() == 0L)
       val delta = e.filter(col("vec_id") % 8 === 7)
-      Similarity.appendToIvfPqIndex(spark, delta, root, "d1")
+      Similarity.appendToIvfPqIndexProd(spark, delta, root, "d1")
       val ifs = IndexFs.on(spark, root)
       def postingFiles() = ifs
         .listFilesRec(ifs.child("postings.parquet")).map(_.toString)
@@ -110,7 +110,7 @@ class IndexFsSpec extends AnyFunSuite {
       val (files1, rows1) = (postingFiles(), queryRows())
       assert(rows1.nonEmpty)
       // a retried append must be a no-op: the marker lives on graftfs
-      Similarity.appendToIvfPqIndex(spark, delta, root, "d1")
+      Similarity.appendToIvfPqIndexProd(spark, delta, root, "d1")
       assert(postingFiles() == files1,
         "retried append changed the postings file set — marker not honored")
       assert(queryRows() == rows1)
@@ -141,11 +141,11 @@ class IndexFsSpec extends AnyFunSuite {
     try {
       val dir = graft.TestSpark.sfDir
       val e = Tables.embeddings(spark, dir)
-      Similarity.buildIvfPqIndexOn(spark,
+      Similarity.buildIvfPqIndexProdOn(spark,
         e.filter(col("vec_id") % 8 =!= 7), s"$alias/v-001")
       Similarity.publishIndexVersion(spark, alias, "v-001")
       assert(Similarity.resolveIndexAlias(spark, alias) == s"$alias/v-001")
-      Similarity.buildIvfPqIndexOn(spark, e, s"$alias/v-002")
+      Similarity.buildIvfPqIndexProdOn(spark, e, s"$alias/v-002")
       Similarity.publishIndexVersion(spark, alias, "v-002")
       assert(Similarity.resolveIndexAlias(spark, alias) == s"$alias/v-002")
       val rows = Similarity.annIvfPqIndexed(spark, dir,
